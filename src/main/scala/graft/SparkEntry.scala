@@ -3350,8 +3350,8 @@ object SparkEntry {
       val marker = when(isKeep,
         lit("qkeepa qkeepb qkeepa qkeepb qkeepa qkeepb"))
         .otherwise(lit("qtossa qtossb qtossa qtossb qtossa qtossb"))
-      // truncate (localCheckpoint), not persist, for every cached frame
-      // in this chain: a persist dedups execution but each reference
+      // truncate (the CacheLifecycle seam), not persist, for every cached
+      // frame in this chain: a persist dedups execution but each reference
       // re-inlines the frame's whole analyzed lineage, and the trees
       // multiply stage over stage until driver-side PLANNING dominates
       // (the r19 sampling finding; same discipline as Curation.pipeline)

@@ -2,18 +2,26 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graftshim.DatasetShim
 import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
-/** Automatic release of internally persisted frames.
+/** Materialization and cache lifetime for the library's internal frames.
   *
-  * Pipeline pair-search functions persist small intermediate frames
+  * [[truncate]] is the one way to materialize a frame and make its plan
+  * leaf-sized; [[releaseTruncated]] is the one way to release any cached
+  * frame, and [[isMaterialized]] the one test for "already cached".
+  *
+  * Automatic release of internally persisted frames: pipeline
+  * pair-search functions persist small intermediate frames
   * (signatures, capped LSH buckets) because several join sides probe them.
   * The result DataFrame is lazy, so the function itself cannot unpersist —
   * instead the result is tagged with a uniquely named `observe` metric and a
-  * one-shot [[QueryExecutionListener]] unpersists the caches once
+  * one-shot [[QueryExecutionListener]] releases the caches once
   * [[withConsumptions]]-many actions have executed a plan carrying that
   * tag (default: the first). On a long-lived session (the 100-TB pipeline
   * case) caches therefore live exactly as long as the result is
@@ -29,34 +37,53 @@ import org.apache.spark.sql.util.QueryExecutionListener
   */
 object CacheLifecycle {
 
-  /** Materialize `df` NOW and truncate its logical plan to the computed
-    * result (`localCheckpoint`): the same single evaluation a persist
-    * would buy, but downstream consumers see a `LogicalRDD` leaf instead
-    * of the full re-inlined lineage. In the deep curation chains the
-    * analyzed tree behind each cached frame multiplies at every
-    * reference (execution is deduped by the cache; PLAN SIZE is not),
-    * and analysis + cache-lookup canonicalization of those trees — not
-    * execution — was the measured dominant driver cost (r19 sampling:
-    * ~5 s of a 13 s q136). Pair with [[releaseTruncated]]; semantics are
-    * persist-identical (one deterministic evaluation, downstream reads
-    * the materialized rows). In-query lifetime only — nothing outlives
-    * the query or keys on the input path.
+  /** The library's one materialization seam. Evaluates `df` NOW in one
+    * job (one SQL execution, so `Observation`s and listeners on `df`
+    * fire as for any action), persists the rows (MEMORY_AND_DISK) and
+    * returns a frame whose plan is a `LogicalRDD` leaf over them.
+    * Downstream plans are leaf-sized instead of re-inlining the whole
+    * analyzed lineage at every reference: in the deep curation chains
+    * those trees multiply stage over stage, and analysis + cache-lookup
+    * canonicalization of them, not execution, was the measured driver
+    * cost (r19 sampling: ~5 s of a 13 s q136).
+    *
+    * The leaf's RDD KEEPS its lineage: a lost block (executor loss) or a
+    * read after [[releaseTruncated]] recomputes from the source — correct
+    * for a deterministic upstream, just slower — exactly as a persisted
+    * frame would. The price: every task that reads the leaf also
+    * deserializes the upstream narrow chain, which shows on small,
+    * job-bound chains. If the evaluation throws, the partial blocks are
+    * released before the exception propagates.
+    *
+    * Two call sites deliberately CUT lineage with Spark's local
+    * checkpoint instead: `Dedup.connectedComponents` (per round) and
+    * `StreamingVerification.truncateGroupingLineage` (per micro-batch).
+    * There the lineage grows with every round or batch, so keeping it
+    * would retain every earlier round's plan and shuffle output.
     */
-  def truncate(df: DataFrame): DataFrame = df.localCheckpoint()
+  def truncate(df: DataFrame): DataFrame =
+    DatasetShim.persistedLeaf(df, StorageLevel.MEMORY_AND_DISK)
 
-  /** Release a frame produced by [[truncate]] (the blocks hang off the
-    * checkpointed RDD, which Dataset.unpersist does not reach); falls
-    * back to a plain unpersist for non-truncated frames, so release
-    * lists may mix both kinds.
+  /** True when `df` is already materialized — a [[truncate]] leaf (or
+    * any frame rooted on a persisted RDD) or a CacheManager entry — so a
+    * consumer that needs one evaluation can use it as-is.
+    */
+  private[pipeline] def isMaterialized(df: DataFrame): Boolean =
+    persistedLeafRdd(df).isDefined || df.storageLevel != StorageLevel.NONE
+
+  /** The one release path for any frame: unpersists the leaf RDD of a
+    * [[truncate]] result and the CacheManager entry of a persisted
+    * frame (non-blocking). A released frame stays usable — later reads
+    * recompute from lineage.
     */
   def releaseTruncated(df: DataFrame): Unit = {
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => df.unpersist(blocking = false)
-    }
-    ()
+    persistedLeafRdd(df).foreach(_.unpersist(blocking = false))
+    df.unpersist(blocking = false)
   }
+
+  private def persistedLeafRdd(df: DataFrame): Option[RDD[_]] =
+    Some(df.queryExecution.analyzed).collect { case lr: LogicalRDD => lr.rdd }
+      .filter(_.getStorageLevel != StorageLevel.NONE)
 
   /** Actions (with or without the tag) after which an unconsumed result's
     * caches are released anyway — a safety valve for results that are
@@ -129,7 +156,7 @@ object CacheLifecycle {
         val expired = tagsInPlan == 0 &&
           unrelatedActions.incrementAndGet() >= MaxUnconsumedActions
         if ((consumedEnough || expired) && done.compareAndSet(false, true)) {
-          caches.foreach(_.unpersist(blocking = false))
+          caches.foreach(releaseTruncated)
           spark.listenerManager.unregister(this)
         }
       }

@@ -43,9 +43,10 @@ object Classify {
       classLogPrior: DataFrame,
       vocabSize: Long,
       alpha: Double) {
-    /** `termLogProb` is persisted by [[modelFromCounts]] (it is consumed
-      * by every scoring pass); call this when done with the model to
-      * release the cache.
+    /** `termLogProb` is materialized by [[modelFromCounts]] (it is
+      * consumed by every scoring pass); call this when done with the
+      * model to release its blocks. A released model still scores
+      * identically — the table recomputes from its lineage, just slower.
       */
     def release(): Unit = CacheLifecycle.releaseTruncated(termLogProb)
   }
@@ -175,7 +176,7 @@ object Classify {
     // depends on cache-stats timing.
     // truncate, not persist: every scoring pass embeds this frame (via
     // broadcast) in its plan, and the dense table's lineage re-inlines
-    // the whole seed tokenize tree at each reference — the checkpoint
+    // the whole seed tokenize tree at each reference — the seam
     // materializes once (before the counts cache drops, as the persist+
     // count did) and hands consumers a leaf-sized plan
     val termLogProb = CacheLifecycle.truncate(vocab

@@ -22,9 +22,12 @@ import org.apache.spark.storage.StorageLevel
   *  - per-stage censuses come from counts over those cached slim
   *    frames, so the builder's bookkeeping adds no corpus scans.
   *
-  * The builder is EAGER (classifier training and censuses run driver
-  * actions as stages execute). `Result.docs` stays lazy over the
-  * internal caches; call `Result.release()` after consuming it.
+  * The builder is EAGER: every internal cache materializes through
+  * [[CacheLifecycle.truncate]] as its stage executes, and classifier
+  * training runs driver actions. `Result.docs` stays lazy over those
+  * caches; call `Result.release()` after consuming it. If a stage
+  * throws, the caches built so far are released before the exception
+  * propagates.
   *
   * 100 TB shape: every stage is map-side-combinable aggregation +
   * broadcast-model scoring + slim-key semi-joins; nothing shuffles the
@@ -90,28 +93,27 @@ object Curation {
   final case class DedupAgainstState(statePath: String, batchId: String)
       extends Stage
 
-  /** `docs`: the lazy surviving frame (consume, then `release()`).
-    * `censuses`: ordered (stage_name, value) rows — doc counts per
-    * stage plus stage-specific extras (boilerplate removed lines).
-    */
-  /** `censuses` resolves LAZILY from named observations riding the
-    * stage frames (the q96 action-fusion discipline: a census never
-    * adds a job — it fires inside whatever job first materializes its
-    * stage). Read it AFTER consuming `docs` (or any full action over
-    * the result); reading earlier blocks until the pipeline's frames
-    * have materialized once.
+  /** `docs`: the lazy surviving frame (consume, then `release()`; a
+    * read after `release()` returns the same rows, recomputed from
+    * lineage). `censuses`: ordered (stage_name, value) rows — doc counts
+    * per stage plus stage-specific extras (boilerplate removed lines).
+    *
+    * `censuses` resolves from named observations riding the stage
+    * frames (the q96 action-fusion discipline: a census never adds a
+    * job — it fires inside the job that first materializes its stage).
+    * Every census-bearing stage materializes eagerly inside `pipeline`
+    * (the seam's one job per cache), so reading `censuses` needs no
+    * further action; it waits only for listener-bus delivery. The one
+    * exception: with `persistInput = false` and only `MapText` stages,
+    * `input_docs` fires with the first consumption of `docs`.
     */
   final class Result private[Curation] (
       val docs: DataFrame,
       names: Seq[String],
       resolve: String => Double,
-      caches: Seq[DataFrame],
-      releasers: Seq[() => Unit]) {
+      releaseAll: () => Unit) {
     lazy val censuses: Seq[(String, Double)] = names.map(n => n -> resolve(n))
-    def release(): Unit = {
-      caches.foreach(CacheLifecycle.releaseTruncated)
-      releasers.foreach(_())
-    }
+    def release(): Unit = releaseAll()
   }
 
   /** `persistInput = false` skips caching the input frame: the right
@@ -162,14 +164,15 @@ object Curation {
     // current frame is always epochBase ⋈ the LATEST survivor set — ONE
     // slim join, never a growing join chain (the hand-rolled q96 trick,
     // generalized).
-    // caches are TRUNCATING (localCheckpoint, CacheLifecycle.truncate),
-    // not plain persists: a persist dedups execution but every reference
-    // still re-inlines the frame's whole analyzed lineage, and in this
-    // chain the trees multiply stage over stage until PLANNING (analysis
-    // + cache-lookup canonicalization) dominates the driver (r19
-    // sampling: ~5 s of q136's 13 s). The checkpoint materializes at the
+    // caches go through the materialization seam (CacheLifecycle.
+    // truncate), not plain persists: a persist dedups execution but every
+    // reference still re-inlines the frame's whole analyzed lineage, and
+    // in this chain the trees multiply stage over stage until PLANNING
+    // (analysis + cache-lookup canonicalization) dominates the driver
+    // (r19 sampling: ~5 s of q136's 13 s). The seam materializes at the
     // same point the first consuming action would and hands every later
-    // stage a leaf-sized plan. In-query lifetime; released with Result.
+    // stage a leaf-sized plan. In-query lifetime; released with Result,
+    // or before rethrowing when a stage throws.
     var epochBase: DataFrame = {
       val in = observed("input_docs", docs, count(lit(1)))
       if (!persistInput) in
@@ -205,8 +208,13 @@ object Curation {
       caches += kept
       latestKept = kept
     }
+    def releaseAll(): Unit = {
+      caches.foreach(CacheLifecycle.releaseTruncated)
+      releasers.foreach(_())
+    }
 
-    stages.foreach {
+    // a throwing stage must not strand the caches built before it
+    try stages.foreach {
       case RemoveBoilerplate(groupCol, maxDocFrac, minDocs) =>
         // drop the census column BEFORE the persist: the cache is the
         // pipeline's one full-text copy and every later stage scans it —
@@ -316,9 +324,8 @@ object Curation {
         applySurvivors("state_dedup_kept",
           Dedup.exactDedupIncremental(frame, textCol, idCol, seen)
             .select(col(idCol)))
-    }
+    } catch { case t: Throwable => releaseAll(); throw t }
 
-    new Result(frame, names.toSeq, n => thunks(n)(), caches.toSeq,
-      releasers.toSeq)
+    new Result(frame, names.toSeq, n => thunks(n)(), () => releaseAll())
   }
 }

@@ -1345,8 +1345,8 @@ object Dedup {
     * signature pass [[nearDuplicateClusters]] would redo.
     */
   def clustersFromPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    // the first round's eager localCheckpoint inside connectedComponents
-    // is the single consumption that releases any upstream cache
+    // the first action inside connectedComponents (which checkpoints the
+    // edge set) is the single consumption that releases any upstream cache
     val comps = connectedComponents(pairs.select("id_a", "id_b"))
     df.join(comps, df(idCol).cast(LongType) === comps("node"), "left_outer")
       .select(df.columns.map(df(_)) :+

@@ -363,15 +363,13 @@ object Mixing {
           if (c <= bud(g)) Iterator(Row(id)) else Iterator.empty
         }
       }
-      // materialize the thin id set before releasing the slim cache — the
-      // returned frame is lazy, and an unpersisted `slim` would re-run the
-      // range shuffle (and re-sample its bounds) at consumption time. The
-      // id cache itself is id-width only and is reclaimed by the
+      // materialize the thin id set (through the seam) before releasing
+      // the slim cache — the returned frame is lazy, and an unpersisted
+      // `slim` would re-run the range shuffle at consumption time. The id
+      // leaf itself is id-width only and is reclaimed by the
       // ContextCleaner when the returned frame goes unreachable.
-      keptIds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      keptIds.count()
-      val keptDf = spark.createDataFrame(keptIds,
-        StructType(Seq(idField.copy(name = idCol))))
+      val keptDf = CacheLifecycle.truncate(spark.createDataFrame(keptIds,
+        StructType(Seq(idField.copy(name = idCol)))))
       df.join(keptDf, Seq(idCol), "left_semi")
     } finally {
       slim.unpersist(blocking = false)
@@ -508,15 +506,14 @@ object Mixing {
           Row(id, w, start, probesBelow(start + w) - probesBelow(start))
         }
       }
-      val out = spark.createDataFrame(rows, StructType(Seq(
-        idField.copy(name = idCol),
-        StructField("weight", LongType, nullable = false),
-        StructField("start", LongType, nullable = false),
-        StructField("pps_mult", LongType, nullable = false))))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // materialize before the slim cache releases — the frame is lazy,
-      // and re-running the range shuffle would re-sample its bounds
-      out.count()
+      // materialize (through the seam) before the slim cache releases —
+      // the frame is lazy, and would otherwise re-run the range shuffle
+      val out = CacheLifecycle.truncate(spark.createDataFrame(rows,
+        StructType(Seq(
+          idField.copy(name = idCol),
+          StructField("weight", LongType, nullable = false),
+          StructField("start", LongType, nullable = false),
+          StructField("pps_mult", LongType, nullable = false)))))
       CacheLifecycle.releaseOnConsume(
         out.select(out.columns.map(col).toSeq: _*), Seq(out))
     } finally {

@@ -219,15 +219,13 @@ object Packing {
           r
         }
       }
-      // materialize before releasing the slim cache — the returned frame
-      // is lazy, and an unpersisted `slim` would re-run the range shuffle
-      // (and re-sample its bounds) at consumption time
-      rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rows.count()
-      spark.createDataFrame(rows, StructType(Seq(
+      // materialize (through the seam) before releasing the slim cache —
+      // the returned frame is lazy, and an unpersisted `slim` would re-run
+      // the range shuffle at consumption time
+      CacheLifecycle.truncate(spark.createDataFrame(rows, StructType(Seq(
         idField.copy(name = idCol),
         StructField("graft_nt", LongType, nullable = false),
-        StructField("graft_start", LongType, nullable = false))))
+        StructField("graft_start", LongType, nullable = false)))))
     } finally {
       slim.unpersist(blocking = false)
       ()

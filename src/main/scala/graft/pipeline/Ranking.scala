@@ -74,27 +74,19 @@ object Ranking {
           s"'$c' is ${schema(c).dataType.simpleString}")
     }
     val sortCols = (groupCol +: orderCols).map(col)
-    // cache the input: repartitionByRange SAMPLES its child to pick the
-    // range bounds, so an uncached upstream is evaluated at least twice
-    // (sample pass + shuffle pass) — and upstreams that release their
-    // OWN internal caches after one consumption (the CacheLifecycle
-    // convention, e.g. the LM scorers' tf frame) would recompute from
-    // the raw corpus on the second pass. A frame the caller already
-    // persisted is used as-is (and not released).
-    val callerCached =
-      df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-    // localCheckpoint, not persist: beyond the cache (both evaluate the
-    // upstream once), the checkpoint TRUNCATES the logical plan to a
-    // LogicalRDD leaf. The `.rdd` conversion below and the count/assign
-    // passes each re-plan this subtree, and in the curation chains the
-    // analyzed tree behind `df` is huge (every cached frame's full
-    // lineage re-inlined at each reference) — planning, not execution,
-    // was the measured cost (~3 s of driver RUNNABLE time in q136's
-    // perplexity stage). The checkpointed blocks release with the RDD
-    // via the ContextCleaner once the returned frame's cache drops.
-    val input =
-      if (callerCached) df
-      else df.localCheckpoint()
+    // materialize the input: repartitionByRange SAMPLES its child to
+    // pick the range bounds, so an unmaterialized upstream is evaluated
+    // at least twice (sample pass + shuffle pass) — and upstreams that
+    // release their OWN internal caches after one consumption (the
+    // CacheLifecycle convention, e.g. the LM scorers' tf frame) would
+    // recompute from the raw corpus on the second pass. The seam also
+    // hands the `.rdd` conversion and the count/assign passes below a
+    // leaf-sized plan: in the curation chains the analyzed tree behind
+    // `df` is huge, and re-planning it was the measured cost (~3 s of
+    // driver RUNNABLE time in q136's perplexity stage). A frame the
+    // caller already materialized is used as-is (and not released).
+    val callerCached = CacheLifecycle.isMaterialized(df)
+    val input = if (callerCached) df else CacheLifecycle.truncate(df)
     val sorted = input
       .repartitionByRange(sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
@@ -161,30 +153,21 @@ object Ranking {
           Row.fromSeq(r.toSeq :+ bucket)
         }
       }
-      // cache as a DataFrame (not the RDD — an RDD persist has no
-      // release path a caller can see) and materialize BEFORE the
-      // sorted cache is released below: the frame is lazy, and
-      // re-running the range shuffle would re-sample its bounds. The
-      // cache itself releases after the caller's first consumption via
-      // CacheLifecycle — nothing strands for the session.
-      val cached = spark.createDataFrame(out,
+      // materialize through the seam BEFORE the sorted cache is
+      // released below, so the assign pass reads the cached sort. The
+      // leaf releases after the caller's first consumption via
+      // CacheLifecycle — nothing strands for the session, and a later
+      // read recomputes from lineage (the range bounds are fixed in the
+      // shuffle dependency, so a recompute lands rows in the same
+      // buckets).
+      val cached = CacheLifecycle.truncate(spark.createDataFrame(out,
         StructType(schema.fields :+
-          StructField(bucketCol, IntegerType, nullable = false)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached.count()
+          StructField(bucketCol, IntegerType, nullable = false))))
       CacheLifecycle.releaseOnConsume(
         cached.select(cached.columns.map(col).toSeq: _*), Seq(cached))
     } finally {
       sorted.unpersist(blocking = false)
-      // a localCheckpointed frame's blocks hang off the RDD, not the
-      // CacheManager — unpersist the RDD itself (Dataset.unpersist would
-      // be a no-op and the blocks would wait for the ContextCleaner)
-      if (!callerCached) input.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(blocking = false)
-        case _ => input.unpersist(blocking = false)
-      }
-      ()
+      if (!callerCached) CacheLifecycle.releaseTruncated(input)
     }
   }
 
