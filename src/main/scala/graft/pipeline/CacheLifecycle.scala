@@ -2,13 +2,11 @@ package graft.pipeline
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftshim.DatasetShim
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.apache.spark.storage.StorageLevel
 
 /** Materialization and cache lifetime for the library's internal frames.
   *
@@ -61,15 +59,14 @@ object CacheLifecycle {
     * There the lineage grows with every round or batch, so keeping it
     * would retain every earlier round's plan and shuffle output.
     */
-  def truncate(df: DataFrame): DataFrame =
-    DatasetShim.persistedLeaf(df, StorageLevel.MEMORY_AND_DISK)
+  def truncate(df: DataFrame): DataFrame = DatasetShim.persistedLeaf(df)
 
   /** True when `df` is already materialized — a [[truncate]] leaf (or
     * any frame rooted on a persisted RDD) or a CacheManager entry — so a
     * consumer that needs one evaluation can use it as-is.
     */
   private[pipeline] def isMaterialized(df: DataFrame): Boolean =
-    persistedLeafRdd(df).isDefined || df.storageLevel != StorageLevel.NONE
+    DatasetShim.persistedLeafRdd(df).isDefined || df.storageLevel.isValid
 
   /** The one release path for any frame: unpersists the leaf RDD of a
     * [[truncate]] result and the CacheManager entry of a persisted
@@ -77,13 +74,9 @@ object CacheLifecycle {
     * recompute from lineage.
     */
   def releaseTruncated(df: DataFrame): Unit = {
-    persistedLeafRdd(df).foreach(_.unpersist(blocking = false))
+    DatasetShim.persistedLeafRdd(df).foreach(_.unpersist(blocking = false))
     df.unpersist(blocking = false)
   }
-
-  private def persistedLeafRdd(df: DataFrame): Option[RDD[_]] =
-    Some(df.queryExecution.analyzed).collect { case lr: LogicalRDD => lr.rdd }
-      .filter(_.getStorageLevel != StorageLevel.NONE)
 
   /** Actions (with or without the tag) after which an unconsumed result's
     * caches are released anyway — a safety valve for results that are

@@ -508,12 +508,11 @@ object Mixing {
       }
       // materialize (through the seam) before the slim cache releases —
       // the frame is lazy, and would otherwise re-run the range shuffle
-      val out = CacheLifecycle.truncate(spark.createDataFrame(rows,
-        StructType(Seq(
-          idField.copy(name = idCol),
-          StructField("weight", LongType, nullable = false),
-          StructField("start", LongType, nullable = false),
-          StructField("pps_mult", LongType, nullable = false)))))
+      val out = CacheLifecycle.truncate(spark.createDataFrame(rows, StructType(Seq(
+        idField.copy(name = idCol),
+        StructField("weight", LongType, nullable = false),
+        StructField("start", LongType, nullable = false),
+        StructField("pps_mult", LongType, nullable = false)))))
       CacheLifecycle.releaseOnConsume(
         out.select(out.columns.map(col).toSeq: _*), Seq(out))
     } finally {

@@ -7,8 +7,10 @@ import scala.concurrent.ExecutionContext.Implicits.global
 import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.graftshim.ShuffleOutputs
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{functions, DataFrame, Observation}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 import org.scalatest.wordspec.AnyWordSpec
@@ -160,6 +162,10 @@ class MaterializationSeamSpec extends AnyWordSpec with Matchers with SparkSpec {
       val first = out.collect().map(_.toSeq).toSet
       // the first consumption releases every cache groupedNtile built
       leakedSince(before) shouldBe empty
+      // and losing the range shuffle's output makes the next read rerun
+      // its map stage over the released input
+      out.queryExecution.analyzed.collectLeaves()
+        .collect { case lr: LogicalRDD => lr.rdd }.foreach(ShuffleOutputs.drop)
       out.collect().map(_.toSeq).toSet shouldBe first
     }
 
